@@ -92,7 +92,6 @@ def main() -> None:
         # states machinery exists for.
         import shutil
 
-        import bench as B
         from pyspark.sql import functions as F
 
         from teleharvest_spark import cli, datagen
@@ -156,7 +155,6 @@ def main() -> None:
         )
         for p in (v1, v2, wh, snap):
             shutil.rmtree(p, ignore_errors=True)
-        del B
         print(json.dumps({"resume_crossover": out}))
         return
 

@@ -10,13 +10,15 @@ driver sees them.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import traceback
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
@@ -55,7 +57,7 @@ def assert_snapshot_coverage() -> int:
 
     import __spark_entry__ as E
 
-    snaps = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    snaps = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
     if not snaps:
         print("no CORRECTNESS snapshot found")
         return 1

@@ -14,11 +14,12 @@ Exit 0 = all identical.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 LEVELS = (4, 32)

@@ -24,14 +24,15 @@ import os
 import statistics
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from teleharvest_spark.benchproto import WarmedChild  # noqa: E402
 
 ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
 PAIRS = int(sys.argv[2]) if len(sys.argv) > 2 else 5
 N_CORES = int(sys.argv[3]) if len(sys.argv) > 3 else 8
 N4_CORES = int(sys.argv[4]) if len(sys.argv) > 4 else 32
-OUT = sys.argv[5] if len(sys.argv) > 5 else "/root/repo/BENCH_scaling_last.json"
+OUT = sys.argv[5] if len(sys.argv) > 5 else os.path.join(ROOT, "BENCH_scaling_last.json")
 JOB = sys.argv[6] if len(sys.argv) > 6 else "suite"
 if JOB not in ("suite", "scan"):
     raise SystemExit(f"job must be 'suite' or 'scan', got {JOB!r}")

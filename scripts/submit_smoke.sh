@@ -14,9 +14,9 @@ trap 'rm -rf "$TMP"' EXIT
 
 # seed a small sequences table (driver-side convenience; the submit
 # below never sees this process's sys.path)
-python - "$TMP" <<'PY'
+python - "$TMP" "$REPO" <<'PY'
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from teleharvest_spark.session import get_spark
 from teleharvest_spark.config import CheckSuite
 from teleharvest_spark import datagen

@@ -33,7 +33,7 @@ from .config import CheckSuite
 from .plans import manifest as mf
 from .plans import suite as suite_plan
 from .session import get_spark, local_df
-from .sources.writer import write_partitioned
+from .sources.writer import dir_key_value, write_partitioned
 
 BASELINE_DIRNAME = "_drift_baseline"
 
@@ -403,6 +403,34 @@ def hot_tokens_pass(
     return report
 
 
+def _fresh_state_partitions(snap_rows, manifest_rows, state_run, candidates) -> set:
+    """Partitions of ``candidates`` whose stored state was written by a
+    run that validated their CURRENT snapshot.
+
+    The (partition, snapshot_id, file_list_hash) inner join of the
+    manifest against the current snapshots runs as a set probe over
+    collected rows. As with SQL ``=``, a key holding a NULL matches
+    nothing, so such tuples are left out on both sides.
+    """
+
+    def key(r):
+        k = (r["partition"], r["snapshot_id"], r["file_list_hash"])
+        return None if None in k else k
+
+    snap_keys = {key(r) for r in snap_rows} - {None}
+    cur_runs: dict[str, set] = {}
+    for r in manifest_rows:
+        if key(r) in snap_keys:
+            cur_runs.setdefault(dir_key_value(r["partition"]), set()).add(
+                r["validated_at_run"]
+            )
+    return {
+        p
+        for p in candidates
+        if p in state_run and state_run[p] in cur_runs.get(p, set())
+    }
+
+
 def run(
     spark: SparkSession,
     input_path: str,
@@ -580,8 +608,6 @@ def run(
                 # source lacks a state (flag enabled mid-history).
                 from .plans import states as st
 
-                from .sources.writer import dir_key_value
-
                 # ONE bounded collect of the (|partitions|-row) state
                 # table; every decision below — freshness, coverage,
                 # the pooled histogram itself — is pure driver
@@ -607,25 +633,10 @@ def run(
                 # has a manifest row for its current snapshot whose
                 # validated_at_run the state's stated_at_run no longer
                 # matches — pooling that state would bake a pre-change
-                # histogram into the baseline. All metadata-sized —
-                # the (partition, snapshot_id, file_list_hash) inner
-                # join runs as a set probe over the collected rows.
-                snap_keys = {
-                    (r["partition"], r["snapshot_id"], r["file_list_hash"])
-                    for r in snap_rows
-                }
-                cur_runs: dict[str, set] = {}
-                for r in manifest_rows:
-                    key = (r["partition"], r["snapshot_id"], r["file_list_hash"])
-                    if key in snap_keys:
-                        cur_runs.setdefault(
-                            dir_key_value(r["partition"]), set()
-                        ).add(r["validated_at_run"])
-                fresh = {
-                    p
-                    for p in non_pending
-                    if p in state_run and state_run[p] in cur_runs.get(p, set())
-                }
+                # histogram into the baseline. All metadata-sized.
+                fresh = _fresh_state_partitions(
+                    snap_rows, manifest_rows, state_run, non_pending
+                )
                 if non_pending <= fresh:
                     # restrict to CURRENT non-pending partitions: a
                     # source whose data vanished from the input keeps
@@ -751,8 +762,6 @@ def run(
         # pinned by the violations/verdicts writes that precede the
         # tail, so no concurrent cache-fill race exists.
         from pyspark.sql import Observation
-
-        from .sources.writer import dir_key_value
 
         fid = res.failing_ids.select(F.col("doc_id").alias("_fid"))
         valid = sequences.join(

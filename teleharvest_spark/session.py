@@ -11,8 +11,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for local[N] on a 32-core / 128 GiB box; on a real
-# cluster spark-submit overrides master/memory and the rest still apply.
+
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 24g. In local mode the driver
+    heap holds every executor too, so a heap above RAM (24g on a 16 GB
+    host) invites the OOM killer instead of a spill."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, ram // 2**31))}g"
+
+
+# Master and driver heap follow the host: local[<usable cores>] and at
+# most half of RAM (SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override
+# both). On a real cluster spark-submit overrides master/memory and the
+# rest still apply.
 _BASE_CONF: dict[str, str] = {
     # AQE: runtime coalescing + skew-join splitting (north_rule requires
     # explicit skew handling; AQE covers joins, manual salting covers
@@ -20,6 +31,20 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce plans that are being persisted. Spark's default
+    # (false) keeps a cached aggregate at spark.sql.shuffle.partitions,
+    # so the dup-key set, part_stats, the drift histogram and every
+    # reader of them ran 32 tasks each: 11 of a validate run's 48 jobs
+    # and 449 tasks for 10k rows, with more task time spent
+    # deserializing plans than computing. Only exchanges coalesce, so
+    # the exchange-free per_row and violations caches keep their
+    # partitioning.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # One validate run generates ~145 classes; Spark's default cache of
+    # 100 evicted them all, so every run recompiled each one in Janino
+    # and again in the JIT (17.7 of a run's 39 CPU-s). Static conf: it
+    # only takes effect when the session is built, as get_spark does.
+    "spark.sql.codegen.cache.maxEntries": "2000",
     # Arrow for every pandas UDF / toPandas boundary (input_hint: no
     # per-row Python).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -34,7 +59,6 @@ _BASE_CONF: dict[str, str] = {
     # task; at the 100 TB target splits ≫ cores holds either way.
     "spark.sql.files.maxPartitionBytes": "67108864",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
 }
 
 
@@ -46,13 +70,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default:
+    the cores this process may run on); the driver heap to
+    ``$SPARK_GRAFT_DRIVER_MEM`` (default: half of RAM, at most 24g).
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        # the affinity mask, not the host's core count: task threads
+        # beyond the cores this process may use only wait
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     builder = SparkSession.builder.master(master).appName(app_name)
     conf = dict(_BASE_CONF)
+    conf["spark.driver.memory"] = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+    )
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:

@@ -107,7 +107,7 @@ def test_iceberg_merge_and_snapshot_incremental_read(tmp_path):
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo" if os.path.isdir("/root/repo") else None,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])

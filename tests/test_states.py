@@ -148,3 +148,18 @@ def test_corpus_stats_cli_report_only(spark, tmp_path, capsys):
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["row_count"] == 3000
     assert rep["distinct_doc_id"] > 0 and "ntok_hist" not in rep
+
+
+def test_null_snapshot_manifest_row_does_not_mark_partition_fresh():
+    """The resume freshness probe keeps the inner-join rule it replaced:
+    a (partition, snapshot_id, file_list_hash) key holding a NULL
+    matches nothing, even a snapshot row that is NULL in the same place."""
+    from teleharvest_spark.cli import _fresh_state_partitions
+
+    def snap(p, sid, h):
+        return {"partition": p, "snapshot_id": sid, "file_list_hash": h}
+
+    snaps = [snap("a", None, "h"), snap("b", 7, None), snap("c", 9, "k")]
+    manifest = [{**s, "validated_at_run": "r1"} for s in snaps]
+    state_run = {"a": "r1", "b": "r1", "c": "r1"}
+    assert _fresh_state_partitions(snaps, manifest, state_run, {"a", "b", "c"}) == {"c"}
