@@ -7,7 +7,7 @@ of pre-tokenized training sequences —
 
 * single-pass per-partition column stats (min/max/null-rate,
   Greenwald-Khanna approx quantiles via ``percentile_approx``,
-  HyperLogLog++ distinct via ``approx_count_distinct``),
+  a DataSketches HLL distinct estimate via ``hll_sketch_agg``),
 * a strictly-ordered row-level check cascade with first-failing-reason
   violation rows (reference: ``processor.py:97-145``),
 * uniqueness on ``doc_id`` via partial-agg hash-aggregate dedup

@@ -721,6 +721,13 @@ def run(
         slice_dims=slice_raw_cols,
         drift_exclude_self=drift_exclude_self,
     )
+    # The verdict table is at most one row per source — metadata-sized,
+    # like the snapshot and manifest collects. Evaluated ONCE here, its
+    # rows feed the verdicts write, the manifest rows, the certify dir
+    # count and the report totals; each of those used to re-evaluate
+    # the verdict plan or recount what its rows already hold.
+    verdict_rows = res.verdicts.collect()
+    verdict_schema = res.verdicts.schema
     # violations land hive-partitioned by a DERIVED dir column with
     # bounded file counts — the common failure-triage read ("show me
     # src_07's violations") prunes whole directories, and a hot
@@ -758,9 +765,9 @@ def run(
         # dir, untouched partitions keep theirs — the certified table
         # stays consistent under --resume.
         # Runs in the overlapped write tail (below): every input it
-        # reads (failing_ids ← the violations cache, res.stats) is
-        # pinned by the violations/verdicts writes that precede the
-        # tail, so no concurrent cache-fill race exists.
+        # reads (failing_ids ← the violations cache) is pinned by the
+        # violations write that precedes the tail, so no concurrent
+        # cache-fill race exists.
         from pyspark.sql import Observation
 
         fid = res.failing_ids.select(F.col("doc_id").alias("_fid"))
@@ -797,7 +804,7 @@ def run(
         except ValueError:
             n_shuffle = spark.sparkContext.defaultParallelism
         n_tasks = max(sequences.rdd.getNumPartitions(), n_shuffle)
-        n_dirs = max(res.stats.count(), 1)  # one row per source value
+        n_dirs = max(len(verdict_rows), 1)  # one row per source value
         inline = n_tasks * n_dirs <= CERTIFY_INLINE_FILE_CAP
         write_partitioned(
             valid,
@@ -913,34 +920,33 @@ def run(
         if sample_frac is not None
         else f"{output_path}/verdicts/{run_id}"
     )
-    res.verdicts.write.mode("overwrite").parquet(verdicts_root)
+    local_df(spark, verdict_rows, verdict_schema).write.mode(
+        "overwrite"
+    ).parquet(verdicts_root)
 
     # Overlapped write tail (guide §2.6): the remaining result writes
     # are independent jobs on DISJOINT directories whose inputs are all
     # pinned by now — the violations write filled the violations/
-    # row-cache entries, the verdicts write filled part_stats/drift.
+    # row-cache entries, the verdict collect filled part_stats/drift.
     # Submitting them from a thread pool lets the scheduler back-fill
     # the tail of each job with the next one's tasks (FIFO), so the
     # wall is max(job) instead of sum(job); the certified-table write
     # (the one big job — a full re-encode of the passing corpus)
-    # overlaps the metadata-sized manifest/key-index/states writes.
-    # Ordering notes preserved from the serial form: the key-index
-    # dynamic overwrite cannot feed back into this run because the dup
-    # set that read the old index rows was materialized with the first
-    # suite job; a sampled run must NOT append manifest rows (the
-    # manifest is the resume contract for FULL validations only).
+    # overlaps the key-index/states writes and the snapshot aggregate.
+    # The manifest append is NOT in the pool: it commits the resume
+    # contract, so it runs only after every tail job has succeeded — a
+    # certify failure after a committed manifest would let the next
+    # --resume skip partitions whose certified dirs are stale. Ordering
+    # notes preserved from the serial form: the key-index dynamic
+    # overwrite cannot feed back into this run because the dup set that
+    # read the old index rows was materialized with the first suite
+    # job; a sampled run must NOT append manifest rows (the manifest is
+    # the resume contract for FULL validations only).
     tail_jobs: list = []
     if emit_valid:
         tail_jobs.append(("certify", _certify_write))
     if sample_frac is None:
-        tail_jobs.append(
-            (
-                "manifest",
-                lambda: mf.append_manifest_rows(
-                    spark, output_path, res.verdicts, snapshots, suite, run_id
-                ),
-            )
-        )
+        tail_jobs.append(("snapshots", snapshots.collect))
     if key_index:
         from .operators import uniqueness
 
@@ -967,16 +973,23 @@ def run(
             tail_jobs.append(
                 ("states", lambda: st.write_states(sequences, output_path, run_id))
             )
-    certified_report = {}
+    tail_out: dict = {}
     if tail_jobs:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(len(tail_jobs)) as ex:
             futures = [(label, ex.submit(fn)) for label, fn in tail_jobs]
-            for label, fut in futures:
-                out = fut.result()
-                if label == "certify":
-                    certified_report = out
+            tail_out = {label: fut.result() for label, fut in futures}
+    certified_report = tail_out.get("certify", {})
+    if sample_frac is None:
+        mf.append_manifest_rows(
+            spark,
+            output_path,
+            local_df(spark, verdict_rows, verdict_schema),
+            local_df(spark, tail_out["snapshots"], snapshots.schema),
+            suite,
+            run_id,
+        )
     if drift and drift_baseline == "previous" and res.hist is not None:
         _store_baseline(spark, output_path, res.hist, prev_baseline, run_id)
     history_report = {}
@@ -1027,21 +1040,18 @@ def run(
                 hist=res.hist,  # suite's persisted histogram (None if drift off)
             ),
         }
-    n_rows = sequences.count()
+    # partition_stats groups EVERY row (NULL source included), and the
+    # verdicts' violation_rows are the exact per-source totals even when
+    # the written violations are a bounded sample
+    n_rows = sum(r["row_count"] for r in verdict_rows)
+    n_viol_exact = sum(r["violation_rows"] for r in verdict_rows)
     wall = time.perf_counter() - t0
     sample_report = {}
     if violation_sample is not None:
-        # the written violations are a bounded sample; the EXACT total
-        # lives in the verdicts' per-check counts
         sample_report = {
             "violations_written": res.violations.count(),
             "violation_sample": violation_sample,
         }
-        n_viol_exact = (
-            res.verdicts.agg(F.sum("violation_rows")).first()[0] or 0
-        )
-    else:
-        n_viol_exact = res.violations.count()
     preflight_report = {}
     if sample_frac is not None:
         preflight_report = {
@@ -1057,7 +1067,7 @@ def run(
         **sample_report,
         **certified_report,
         **({"slices": slices_report} if slices_report else {}),
-        "partitions": res.verdicts.count(),
+        "partitions": len(verdict_rows),
         "wall_sec": round(wall, 3),
         "rows_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
         "suite_hash": suite.suite_hash(),

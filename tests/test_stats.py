@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 
 from teleharvest_spark.config import CheckSuite
@@ -32,9 +34,79 @@ def test_stats_verdicts_thresholds(spark, sequences, suite):
     # planted too_short/too_long rows exist in big sources → min/max trip
     assert rows["src_00"]["stats_verdict"] == "fail"
     assert "min_n_tok" in rows["src_00"]["failed_stat_checks"]
-    # HLL distinct should be within 5% of row count (dups are ~0.1%)
+    # the lgK-14 HLL distinct estimate (rsd ~0.8%) should be within 5%
+    # of the row count (dups are ~0.1%)
     a = rows["src_00"]
     assert abs(a["approx_distinct_doc_id"] - a["row_count"]) / a["row_count"] < 0.05
+
+
+def _agg_buffer_widths(df) -> list[int]:
+    """Buffer attribute count of each aggregate node in ``df``'s
+    physical plan (before exchanges and AQE are added)."""
+    widths = []
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if "Aggregate" in node.nodeName():
+            widths.append(node.aggregateBufferAttributes().size())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return widths
+
+
+def test_partition_stats_aggregate_buffer_is_narrow(spark):
+    """One binary sketch buffer for the distinct estimate: the whole
+    aggregate carries ~10 buffer attributes (HLL++'s
+    approx_count_distinct alone packed its registers into 1,639)."""
+    df = spark.range(0, 10).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.lit(None).cast("array<int>").alias("tokens"),
+        F.col("id").cast("int").alias("n_tok"),
+        F.lit("s").alias("source"),
+    )
+    widths = _agg_buffer_widths(stats.partition_stats(df))
+    assert widths and max(widths) <= 32, widths
+
+
+def _distinct_estimate(spark, n_rows: int, n_keys: int) -> int:
+    df = spark.range(0, n_rows, 1, 4).select(
+        F.concat(F.lit("d"), (F.col("id") % n_keys).cast("string")).alias(
+            "doc_id"
+        ),
+        F.lit(None).cast("array<int>").alias("tokens"),
+        F.lit(1).alias("n_tok"),
+        F.lit("s").alias("source"),
+    )
+    return stats.partition_stats(df).first()["approx_distinct_doc_id"]
+
+
+def test_distinct_estimate_exact_small_and_bounded_large(spark):
+    """At ~500 keys the sketch is still in its exact (coupon) mode; at
+    ≥100k distinct keys it is in HLL mode, where lgK 14 gives rsd ~0.8%
+    — 3% is ~4σ. Duplicated rows must not move the estimate."""
+    assert _distinct_estimate(spark, 1_000, 500) == 500
+    n = 150_000
+    est = _distinct_estimate(spark, n + n // 10, n)
+    assert abs(est - n) / n < 0.03, est
+
+
+def test_gk_2500_rank_error_bound(spark):
+    """partition_stats runs percentile_approx at accuracy 2500, whose
+    rank error is ≤ n/2500 = 4e-4·n. Values are a permutation of
+    0..n-1, so a returned value v has rank v+1; the exact p-quantile
+    has rank ⌈p·n⌉. At this size the sketch reaches the bound (80 ranks
+    is seen), so a coarser accuracy would fail."""
+    n = 200_000
+    df = spark.range(0, n, 1, 4).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.lit(None).cast("array<int>").alias("tokens"),
+        # 7919 is coprime with n: a scrambled arrival order
+        ((F.col("id") * 7919) % n).cast("int").alias("n_tok"),
+        F.lit("s").alias("source"),
+    )
+    q = stats.partition_stats(df).first()["ntok_quantiles"]
+    for got, p in zip(q, (0.5, 0.95, 0.99)):
+        assert abs(got + 1 - math.ceil(p * n)) <= 4e-4 * n, (p, got)
 
 
 def test_sketch_tolerance_vs_exact(spark):
