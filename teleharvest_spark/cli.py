@@ -722,12 +722,11 @@ def run(
         drift_exclude_self=drift_exclude_self,
     )
     # The verdict table is at most one row per source — metadata-sized,
-    # like the snapshot and manifest collects. Evaluated ONCE here, its
+    # like the snapshot and manifest collects. Evaluated ONCE here: its
     # rows feed the verdicts write, the manifest rows, the certify dir
-    # count and the report totals; each of those used to re-evaluate
-    # the verdict plan or recount what its rows already hold.
+    # count and the report totals, so none of them re-runs the plan.
     verdict_rows = res.verdicts.collect()
-    verdict_schema = res.verdicts.schema
+    verdicts_local = local_df(spark, verdict_rows, res.verdicts.schema)
     # violations land hive-partitioned by a DERIVED dir column with
     # bounded file counts — the common failure-triage read ("show me
     # src_07's violations") prunes whole directories, and a hot
@@ -920,9 +919,7 @@ def run(
         if sample_frac is not None
         else f"{output_path}/verdicts/{run_id}"
     )
-    local_df(spark, verdict_rows, verdict_schema).write.mode(
-        "overwrite"
-    ).parquet(verdicts_root)
+    verdicts_local.write.mode("overwrite").parquet(verdicts_root)
 
     # Overlapped write tail (guide §2.6): the remaining result writes
     # are independent jobs on DISJOINT directories whose inputs are all
@@ -985,7 +982,7 @@ def run(
         mf.append_manifest_rows(
             spark,
             output_path,
-            local_df(spark, verdict_rows, verdict_schema),
+            verdicts_local,
             local_df(spark, tail_out["snapshots"], snapshots.schema),
             suite,
             run_id,
