@@ -721,12 +721,6 @@ def run(
         slice_dims=slice_raw_cols,
         drift_exclude_self=drift_exclude_self,
     )
-    # The verdict table is at most one row per source — metadata-sized,
-    # like the snapshot and manifest collects. Evaluated ONCE here: its
-    # rows feed the verdicts write, the manifest rows, the certify dir
-    # count and the report totals, so none of them re-runs the plan.
-    verdict_rows = res.verdicts.collect()
-    verdicts_local = local_df(spark, verdict_rows, res.verdicts.schema)
     # violations land hive-partitioned by a DERIVED dir column with
     # bounded file counts — the common failure-triage read ("show me
     # src_07's violations") prunes whole directories, and a hot
@@ -919,6 +913,16 @@ def run(
         if sample_frac is not None
         else f"{output_path}/verdicts/{run_id}"
     )
+    # The verdict table is at most one row per source — metadata-sized,
+    # like the snapshot and manifest collects. Evaluated ONCE here: its
+    # rows feed the verdicts write, the manifest rows, the certify dir
+    # count and the report totals, so none of them re-runs the plan.
+    # Collected only after the violations write has filled the suite's
+    # row cache: as the first action, the verdict job would read the
+    # unfilled cache through two subtrees (part_stats and the per-check
+    # violations) and decode the tokens once per subtree.
+    verdict_rows = res.verdicts.collect()
+    verdicts_local = local_df(spark, verdict_rows, res.verdicts.schema)
     verdicts_local.write.mode("overwrite").parquet(verdicts_root)
 
     # Overlapped write tail (guide §2.6): the remaining result writes

@@ -82,7 +82,9 @@ DEFAULT_PREFIX_RULES: dict[str, AnomalyRule] = {
 # anomalies; the opposite movements are improvements.
 DEFAULT_RULES: dict[str, AnomalyRule] = {
     "row_count": AnomalyRule("lower", 4.0, 0.5),
-    "distinct_doc_id": AnomalyRule("lower", 4.0, 0.5),
+    # DataSketches HLL estimate (manifest.py); the HLL++ estimates older
+    # runs stored under distinct_doc_id never share its band
+    "distinct_doc_id_ds": AnomalyRule("lower", 4.0, 0.5),
     "violation_rows": AnomalyRule("upper", 3.0, 2.0),
     "null_rate": AnomalyRule("upper", 3.0, 2.0),
     "p50_n_tok": AnomalyRule("both", 4.0, 0.5),

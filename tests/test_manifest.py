@@ -145,3 +145,53 @@ def test_compact_manifest_retires_replayed_duplicates(spark, tmp_path):
 def test_compact_manifest_noop_on_empty(spark, tmp_path):
     rep = M.compact_manifest(spark, str(tmp_path / "nowhere"))
     assert rep == {"files_before": 0, "files_after": 0, "rows": 0}
+
+
+def test_estimator_change_does_not_flag_stable_distinct_history(
+    spark, suite, tmp_path
+):
+    """Runs before the DataSketches estimate stored HLL++ estimates
+    under distinct_doc_id, and the sketch reads ~1% lower on the same
+    data (99,859 vs 98,976 at 100k keys). On a partition whose history
+    barely moves, one shared band would put the first sketch run far
+    below -4σ and report the partition anomalous."""
+    from teleharvest_spark.plans import history as H
+
+    out = str(tmp_path / "wh")
+    hll = [99859.0, 99871.0, 99850.0, 99866.0, 99855.0]
+    _mrows(
+        spark,
+        [
+            ("a", f"r{i}", {"row_count": 100000.0, "distinct_doc_id": v})
+            for i, v in enumerate(hll)
+        ],
+    ).write.parquet(M.manifest_path(out))
+    verdicts = spark.createDataFrame(
+        [("a", "pass", 100000, 0, 0.0, [500, 900, 1000], 98976)],
+        "source string, verdict string, row_count long, "
+        "violation_rows long, null_rate double, "
+        "ntok_quantiles array<int>, approx_distinct_doc_id long",
+    )
+    snaps = spark.createDataFrame(
+        [("a", 7, "flh_a")],
+        "partition string, snapshot_id long, file_list_hash string",
+    )
+    M.append_manifest_rows(spark, out, verdicts, snaps, suite, "r5")
+
+    rep = _anomalies(H.anomaly_report(M.read_manifest(spark, out), "r5"))
+    assert rep["distinct_doc_id_ds"]["value"] == 98976.0
+    assert rep["distinct_doc_id_ds"]["hist_n"] == 0  # the band restarts
+    assert not any(r["anomaly"] for r in rep.values())
+
+    # the same estimate in the HLL++ history's band is the false alarm
+    shared = M.read_manifest(spark, out).unionByName(
+        _mrows(spark, [("a", "r5x", {"distinct_doc_id": 98976.0})])
+    )
+    rule = {"distinct_doc_id": H.DEFAULT_RULES["distinct_doc_id_ds"]}
+    mixed = _anomalies(H.anomaly_report(shared, "r5x", rules=rule))
+    assert mixed["distinct_doc_id"]["anomaly"]
+    assert mixed["distinct_doc_id"]["zscore"] < -4
+
+
+def _anomalies(report):
+    return {r["metric"]: r.asDict() for r in report.collect()}

@@ -66,7 +66,6 @@ def test_report_totals_match_independent_counts(spark, tmp_path):
         )
         return out, rep
 
-    run("warm")
     before = _max_job_id(spark)
     out, rep = run("full")
     jobs = _max_job_id(spark) - before
@@ -81,7 +80,11 @@ def test_report_totals_match_independent_counts(spark, tmp_path):
     assert rep["partitions"] == n_sources
     assert spark.read.parquet(f"{out}/verdicts/r1").count() == n_sources
 
+    before = _max_job_id(spark)
     out_s, rep_s = run("sampled", violation_sample=1)
+    jobs_s = _max_job_id(spark) - before
+    # measured 40; 52 with the verdict table evaluated three times
+    assert jobs_s <= 40 + 2, jobs_s
     assert rep_s["validated_rows"] == n_input
     # the exact total, not the written sample
     assert rep_s["violations"] == n_viol
