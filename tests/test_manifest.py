@@ -147,6 +147,10 @@ def test_compact_manifest_noop_on_empty(spark, tmp_path):
     assert rep == {"files_before": 0, "files_after": 0, "rows": 0}
 
 
+def _anomalies(report):
+    return {r["metric"]: r.asDict() for r in report.collect()}
+
+
 def test_estimator_change_does_not_flag_stable_distinct_history(
     spark, suite, tmp_path
 ):
@@ -191,7 +195,3 @@ def test_estimator_change_does_not_flag_stable_distinct_history(
     mixed = _anomalies(H.anomaly_report(shared, "r5x", rules=rule))
     assert mixed["distinct_doc_id"]["anomaly"]
     assert mixed["distinct_doc_id"]["zscore"] < -4
-
-
-def _anomalies(report):
-    return {r["metric"]: r.asDict() for r in report.collect()}
